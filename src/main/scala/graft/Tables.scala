@@ -24,7 +24,7 @@ object Tables {
     * (same LogicalRelation). Entries are per-session, so a stopped
     * session's plans are never served to a live one; the testdata dirs
     * are immutable for a Verify/Bench JVM's lifetime (same contract as
-    * StreamQueries.sortedEventsCache).
+    * Replay.sortedEventsCache).
     */
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[

@@ -299,7 +299,7 @@ object CepQueries {
         (st("s0").head.user_id, st("s0").head.event_id,
           st(last).head.event_id)
       }.toDF("user_id", "a_id", "z_id")
-    StreamQueries.runToEnd(s, input, matches,
+    Replay.runToEnd(s, input, matches,
       evs.grouped(math.max(1, evs.length / 4 + 1)).toSeq,
       rocks = true, restartAfter = restartAfter)
   }

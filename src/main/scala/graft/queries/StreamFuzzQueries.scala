@@ -264,7 +264,7 @@ object StreamFuzzQueries {
     firstSeedOf("t1", StreamFuzzGen.genT1)(_.arm == "firstn")).distinct
 
   /** Deterministic stop/restart boundary for a recovery-arm seed: a
-    * batch index in 1..3 ([[StreamQueries.runToEnd]] clamps into the
+    * batch index in 1..3 ([[Replay.runToEnd]] clamps into the
     * replay's actual batch range) — "random batch boundary", but a pure
     * function of the seed so every run stops at the same place.
     */

@@ -15,7 +15,7 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Run a streaming frame to completion over pre-chunked MemoryStream
     * input and return the memory sink's rows — the spec-side twin of
-    * StreamQueries.runToEnd (unique sink name, temp checkpoint, one
+    * Replay.runToEnd (unique sink name, temp checkpoint, one
     * micro-batch per chunk, stop + checkpoint cleanup in finally).
     * Shared so each differential test doesn't hand-roll the harness.
     */
