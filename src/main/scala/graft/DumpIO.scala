@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Shared plumbing for the differential-fuzz dump mains ([[FuzzDump]],
-  * [[StreamFuzzDump]]): the dev-harness SparkSession and the
-  * `dev/check.py` output layout (per-query parquet + oracle_sql.json).
-  * One escaper serves both dumps so an escaping fix can't apply to one
-  * oracle_sql.json writer and not the other.
+/** Shared plumbing for the dump mains ([[Verify]], [[FuzzDump]],
+  * [[StreamFuzzDump]]): the SparkSession and the `dev/check.py` output
+  * layout (per-query parquet + oracle_sql.json). One escaper serves every
+  * dump so an escaping fix can't apply to one oracle_sql.json writer and
+  * not another.
   */
 private[graft] object DumpIO {
 

@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Dev-only: run named streaming gates with a session-level
-  * StreamingQueryListener and print each micro-batch's durationMs
-  * breakdown (triggerExecution / queryPlanning / walCommit / commitOffsets
-  * / addBatch / getBatch / latestOffset / stateCommit ...), so the
-  * replay pool's per-batch floor is measurable instead of guessed.
+/** Dev-only: run named streaming gates with a SparkContext-level
+  * listener for query progress events and print each micro-batch's
+  * durationMs breakdown (triggerExecution / queryPlanning / walCommit /
+  * commitOffsets / addBatch / getBatch / latestOffset / stateCommit ...),
+  * so the replay pool's per-batch floor is measurable instead of guessed.
   *
   * Usage: StreamProbe <sfDir> <name1,name2,...>
   */
@@ -23,19 +24,19 @@ object StreamProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val batches =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        import scala.jdk.CollectionConverters._
-        val d = p.durationMs.asScala.toSeq.sortBy(-_._2)
-          .map { case (k, v) => s"$k=$v" }.mkString(" ")
-        batches.add((p.batchId, s"rows=${p.numInputRows} $d"))
+    // the SparkContext bus, not spark.streams: every replay gate starts
+    // its query in a child session, whose progress events never reach
+    // the caller's StreamingQueryManager listeners
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case e: StreamingQueryListener.QueryProgressEvent =>
+          val p = e.progress
+          import scala.jdk.CollectionConverters._
+          val d = p.durationMs.asScala.toSeq.sortBy(-_._2)
+            .map { case (k, v) => s"$k=$v" }.mkString(" ")
+          batches.add((p.batchId, s"rows=${p.numInputRows} $d"))
+        case _ =>
       }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     })
     val all = SparkEntry.queries ++ SparkEntry.benchOnly
     // warmup like Bench

@@ -69,10 +69,7 @@ object Tables {
     * of pure re-registration per Bench run (~180 calling keys). The views are only ever the
     * memoized [[load]] frames, so a repeat call with the same (session,
     * sfDir) is an exact no-op; a different sfDir (Bench's sf0.001 warmup →
-    * sf0.1 run) re-registers. Anything that overwrites one of the ten view
-    * names outside this method (ScaleProbes.registerReplicated is the one
-    * site) must call [[invalidateRegistered]] so the next registerAll
-    * restores the real tables.
+    * sf0.1 run) re-registers.
     */
   private val registeredFor =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
@@ -85,11 +82,4 @@ object Tables {
       names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
       registeredFor.put(spark, sfDir)
     }
-
-  /** A caller replaced/dropped one of the [[names]] views directly: the
-    * next [[registerAll]] on this session must re-register instead of
-    * memo-hitting.
-    */
-  def invalidateRegistered(spark: SparkSession): Unit =
-    registeredFor.remove(spark)
 }

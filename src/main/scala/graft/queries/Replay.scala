@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Q._
 import graft.streaming.Changelog
@@ -113,91 +115,64 @@ object Replay {
       // with a caller-provided foreachBatch sink (blackhole-count scale
       // probes) nothing accumulates driver-side; the caller reads its
       // own sink state
-      if (foreachSink.isDefined) s.emptyDataFrame else s.table(name)
+      if (foreachSink.isDefined) s.emptyDataFrame else q.sparkSession.table(name)
     }
   }
 
-  /** Start one replay query against `ckpt` with the harness's pinned
-    * per-query conf (see body comments). Shared by the straight-through
-    * (memory sink) and the stop/restart (foreachBatch — the memory sink
-    * can't recover a checkpoint) arms of [[runToEnd]].
+  /** Start one replay query against `ckpt` in a child of `s`
+    * ([[Bridge.cloneSession]]): the child keeps the caller's conf and
+    * views, so answers cannot shift, and the harness's pinned per-query
+    * conf is set on the child only — the caller's conf and catalog are
+    * never touched, and gates starting concurrently cannot see each
+    * other's settings. A memory-sink view lives in the child's catalog:
+    * read it through the returned query's `sparkSession`. Shared by both
+    * arms of [[runToEnd]] (the stop/restart arm writes through
+    * foreachBatch — the memory sink can't recover a checkpoint) and by
+    * the retained-checkpoint phase 1 of the state-bootstrap gates, which
+    * turn `changelog` off so the offline state read sees plain snapshots.
     */
-  private def startReplayQuery(s: SparkSession, out: DataFrame, name: String,
-      ckpt: String, mode: String, rocks: Boolean,
+  private[queries] def startReplayQuery(s: SparkSession, out: DataFrame,
+      name: String, ckpt: String, mode: String, rocks: Boolean,
       foreachBatch: Option[(DataFrame, Long) => Unit] = None,
-      shufflePartitions: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      shufflePartitions: Int = 2, changelog: Boolean = true): StreamingQuery = {
     require(foreachBatch.isEmpty || mode != "complete",
       "restart arm buffers per-batch emissions; complete mode would " +
         "accumulate one full table per batch")
-    // The replay's state fits a handful of partitions; a wide session
-    // default (32 on the bench box) only multiplies per-micro-batch task
-    // and state-store open/close overhead. The partition count binds at
-    // query start, so the override applies to this stream only and the
-    // session default is restored for the batch queries that follow.
-    // State-store provider is pinned PER QUERY for the same reason:
-    // transformWithState requires RocksDB, but every other operator runs
-    // on the in-memory HDFSBacked store, which commits far cheaper at
-    // replay state sizes — and a leaked session-level RocksDB setting
-    // must not tax the queries that don't need it.
-    val trackConf =
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    // The session conf binds at query START, so the overrides are
-    // pinned only across the start() call. The whole set→start→restore
-    // window holds Q.streamConfLock: Bench can overlap independent
-    // replay gates (SPARK_GRAFT_STREAM_THREADS — serial by default, see
-    // the measured tradeoff in Bench.scala), and an unlocked window
-    // would let one gate capture another's temporary values as its
-    // "previous" state (worst case: a transformWithState gate starting
-    // on the HDFS provider and failing). Starts serialize; the long
-    // part — the micro-batch replay below — can overlap safely.
-    Q.streamConfLock.synchronized {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val prevTrack = s.conf.getOption(trackConf)
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
-      }
-      // default cap 2: replay state fits a handful of partitions and a
-      // wider store only multiplies open/close overhead. The sharded
-      // scale probes RAISE this — at 64x key breadth the 2-partition
-      // store is the bottleneck and sharding is the production lever.
-      val effectiveShards = math.min(prevShuffle.toInt, shufflePartitions)
-      // a clamped shard request must be self-describing: a sharded probe
-      // recorded on a narrow host would otherwise carry its 8-shard
-      // label over an under-sharded measurement
-      if (effectiveShards < shufflePartitions)
-        System.err.println(s"[runToEnd] requested $shufflePartitions " +
-          s"shuffle partitions clamped to $effectiveShards " +
-          "(session default is narrower)")
-      s.conf.set("spark.sql.shuffle.partitions", effectiveShards.toString)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        if (rocks) RocksProvider else HdfsProvider)
-      // replay state is tiny; per-commit row recounts are pure overhead
-      s.conf.set(trackConf, "false")
-      // changelog checkpointing: commit uploads the batch's delta instead
-      // of a full SST snapshot — replay-sized state pays snapshot cost per
-      // store per batch otherwise
-      val changelogConf =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prevChangelog = s.conf.getOption(changelogConf)
-      s.conf.set(changelogConf, "true")
-      try {
-        val base = out.writeStream.outputMode(mode)
-          .option("checkpointLocation", ckpt)
-        foreachBatch match {
-          case Some(fn) => base.foreachBatch(fn).start()
-          case None => base.format("memory").queryName(name).start()
-        }
-      }
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        restore("spark.sql.streaming.stateStore.providerClass", prevProvider)
-        restore(trackConf, prevTrack)
-        restore(changelogConf, prevChangelog)
-      }
+    // default cap 2: replay state fits a handful of partitions and a
+    // wider store only multiplies per-micro-batch task and state-store
+    // open/close overhead. The sharded scale probes RAISE this — at 64x
+    // key breadth the 2-partition store is the bottleneck and sharding
+    // is the production lever.
+    val callerShards = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val effectiveShards = math.min(callerShards, shufflePartitions)
+    // a clamped shard request must be self-describing: a sharded probe
+    // recorded on a narrow host would otherwise carry its 8-shard
+    // label over an under-sharded measurement
+    if (effectiveShards < shufflePartitions)
+      System.err.println(s"[runToEnd] requested $shufflePartitions " +
+        s"shuffle partitions clamped to $effectiveShards " +
+        "(session default is narrower)")
+    val child = Bridge.cloneSession(s)
+    child.conf.set("spark.sql.shuffle.partitions", effectiveShards.toString)
+    // transformWithState requires RocksDB; every other operator runs on
+    // the in-memory HDFSBacked store, which commits far cheaper at replay
+    // state sizes
+    child.conf.set("spark.sql.streaming.stateStore.providerClass",
+      if (rocks) RocksProvider else HdfsProvider)
+    // replay state is tiny; per-commit row recounts are pure overhead
+    child.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+    // changelog checkpointing: commit uploads the batch's delta instead
+    // of a full SST snapshot — replay-sized state pays snapshot cost per
+    // store per batch otherwise
+    child.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      changelog.toString)
+    val base = Bridge.ofRows(child, out.queryExecution.analyzed).writeStream
+      .outputMode(mode).option("checkpointLocation", ckpt)
+    foreachBatch match {
+      case Some(fn) => base.foreachBatch(fn).start()
+      case None => base.format("memory").queryName(name).start()
     }
   }
 

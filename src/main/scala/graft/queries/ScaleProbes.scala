@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.Tables
 import Q._
@@ -66,17 +67,19 @@ object ScaleProbes {
     "supplier" -> Seq("s_suppkey"),
     "part" -> Seq("p_partkey"))
 
-  /** Register the TPC views at `factor`× size (factor 1 = originals).
-    * Replication is a GENERATOR (explode of a replica-index sequence),
-    * not a join — it stays inside whole-stage codegen and cannot perturb
-    * the join shapes the probe is asserting on.
+  /** A child of `s` ([[Bridge.cloneSession]]) whose TPC views are
+    * `factor`× size (factor 1 = originals); the caller's own views are
+    * never replaced. Replication is a GENERATOR (explode of a
+    * replica-index sequence), not a join — it stays inside whole-stage
+    * codegen and cannot perturb the join shapes the probe is asserting
+    * on.
     */
-  private[graft] def registerReplicated(s: SparkSession, dir: String,
-      factor: Int): Unit = {
+  private[graft] def replicated(s: SparkSession, dir: String,
+      factor: Int): SparkSession = {
     Tables.registerAll(s, dir)
-    if (factor == 1) return
-    keyCols.foreach { case (table, keys) =>
-      val base = s.table(table).withColumn("rep",
+    val child = Bridge.cloneSession(s)
+    if (factor > 1) keyCols.foreach { case (table, keys) =>
+      val base = child.table(table).withColumn("rep",
         explode(sequence(lit(0L), lit(factor - 1L))))
       val shifted = keys.foldLeft(base) { (df, k) =>
         df.withColumn(k, col(k) * factor + col("rep"))
@@ -85,9 +88,7 @@ object ScaleProbes {
       // so replacing the view here cannot recurse
       shifted.createOrReplaceTempView(table)
     }
-    // the ten view names no longer hold the base tables: the next
-    // registerAll must restore them, not memo-hit (Tables.registeredFor)
-    Tables.invalidateRegistered(s)
+    child
   }
 
   /** Analyze every shape at `factor`×, assert plan stability, and return
@@ -96,9 +97,9 @@ object ScaleProbes {
     */
   private def probe(s: SparkSession, dir: String, factor: Int,
       shapes: Seq[(String, String)]): DataFrame = {
-    registerReplicated(s, dir, factor)
+    val child = replicated(s, dir, factor)
     val frames = shapes.map { case (name, sql) =>
-      val df = s.sql(sql)
+      val df = child.sql(sql)
       val plan = df.queryExecution.sparkPlan.toString
       require(!plan.contains("CartesianProduct"),
         s"$name flipped to a cartesian product at ${factor}x")
@@ -106,9 +107,6 @@ object ScaleProbes {
         s"$name flipped to a nested-loop join at ${factor}x")
       df.agg(count(lit(1)).as("rows")).withColumn("shape", lit(name))
     }
-    // restore the 1x views for whatever query runs next in the session;
-    // the probe frames captured their (replicated) lineage at analysis
-    Tables.registerAll(s, dir)
     frames.reduce(_ unionAll _)
   }
 

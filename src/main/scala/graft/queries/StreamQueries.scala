@@ -346,27 +346,9 @@ object StreamQueries {
     val in1 = MemoryStream[StateBootstrap.BIn]
     val out1 = StateBootstrap.agg(in1.toDS(),
       s.emptyDataset(Encoders.product[StateBootstrap.BInit]))
-    val q1 = Q.streamConfLock.synchronized {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try out1.writeStream.format("memory")
-        .queryName(s"qsf_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt1).start()
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProvider match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
-    }
+    val q1 = startReplayQuery(s, out1,
+      s"qsf_${java.util.UUID.randomUUID().toString.replace("-", "")}",
+      ckpt1, "update", rocks = true, changelog = false)
     try chunks(hist, 2).foreach { b => in1.addData(b); q1.processAllAvailable() }
     finally q1.stop()
     val boot = StateBootstrap.readAccState(s, ckpt1)
@@ -2392,29 +2374,9 @@ object StreamQueries {
       val in1 = MemoryStream[StateBootstrap.BIn]
       val out1 = StateBootstrap.agg(in1.toDS(),
         s.emptyDataset(Encoders.product[StateBootstrap.BInit]))
-      // same locked set→start→restore window as runToEnd (Bench overlaps
-      // replay gates; see the comment there)
-      val q1 = Q.streamConfLock.synchronized {
-        val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        val prevProvider =
-          s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try out1.writeStream.format("memory")
-          .queryName(s"qsb_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-          .outputMode("update")
-          .option("checkpointLocation", ckpt1).start()
-        finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-          prevProvider match {
-            case Some(p) =>
-              s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-            case None =>
-              s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-        }
-      }
+      val q1 = startReplayQuery(s, out1,
+        s"qsb_${java.util.UUID.randomUUID().toString.replace("-", "")}",
+        ckpt1, "update", rocks = true, changelog = false)
       try chunks(hist, 2).foreach { b => in1.addData(b); q1.processAllAvailable() }
       finally q1.stop()
       // the read→(identity-)rewrite→bootstrap leg; the spec drives a

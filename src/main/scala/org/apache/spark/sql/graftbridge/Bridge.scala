@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal accessor for Spark's `private[sql]` Column <-> Expression
   * conversion — the one internal seam a library registering native
   * Catalyst expressions needs. Lives in an `org.apache.spark.sql`
-  * subpackage solely to satisfy the access modifier; everything else in
+  * subpackage solely to satisfy the access modifiers; everything else in
   * this project stays in `graft.*` against public API.
   */
 object Bridge {
@@ -24,4 +24,14 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A child of `spark` — a copy of its conf and temp views over the
+    * same SparkContext — whose later conf changes, views and streaming
+    * queries stay its own. Spark's StreamExecution clones the session
+    * the same way at query start.
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
 }

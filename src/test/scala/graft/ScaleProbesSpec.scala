@@ -4,8 +4,8 @@ import graft.queries.ScaleProbes
 
 /** The TPC scale-law probe machinery (queries/ScaleProbes): replication
   * is exact (8× rows, replica-disjoint keys), plan stability asserts run
-  * at both factors, and the probe restores the 1× views for whatever
-  * runs next in the session.
+  * at both factors, and the replicated views live in a child session, so
+  * the caller keeps its 1× views.
   */
 class ScaleProbesSpec extends SparkSuite {
 
@@ -17,17 +17,15 @@ class ScaleProbesSpec extends SparkSuite {
     val baseOrders = spark.table("orders").count()
     val baseKeys = spark.table("orders")
       .select("o_orderkey").distinct().count()
-    ScaleProbes.registerReplicated(spark, dir, 8)
-    try {
-      assert(spark.table("lineitem").count() == 8 * base)
-      assert(spark.table("orders").count() == 8 * baseOrders)
-      // key shift keeps replicas join-disjoint: distinct keys also 8×
-      assert(spark.table("orders")
-        .select("o_orderkey").distinct().count() == 8 * baseKeys)
-      // nation stays a fixed dim
-      assert(spark.table("nation").count() ==
-        Tables.load(spark, dir, "nation").count())
-    } finally Tables.registerAll(spark, dir)
+    val child = ScaleProbes.replicated(spark, dir, 8)
+    assert(child.table("lineitem").count() == 8 * base)
+    assert(child.table("orders").count() == 8 * baseOrders)
+    // key shift keeps replicas join-disjoint: distinct keys also 8×
+    assert(child.table("orders")
+      .select("o_orderkey").distinct().count() == 8 * baseKeys)
+    // nation stays a fixed dim
+    assert(child.table("nation").count() ==
+      Tables.load(spark, dir, "nation").count())
   }
 
   test("8x probes run all shapes without plan flips and restore 1x views") {
@@ -40,7 +38,7 @@ class ScaleProbesSpec extends SparkSuite {
       assert(out.nonEmpty && out.forall(_.getLong(0) >= 0L),
         s"$name returned ${out.toSeq}")
     }
-    // the probe re-registered the originals on its way out
+    // the probes replicated in their own session, never in the caller's
     assert(spark.table("lineitem").count() == base)
   }
 
@@ -51,9 +49,7 @@ class ScaleProbesSpec extends SparkSuite {
       s"b_tpch18_scale64 returned ${out.toSeq}")
     // 64× replication really is 64-fold (the generator is factor-generic,
     // but the second octave is the first caller above 8)
-    ScaleProbes.registerReplicated(spark, dir, 64)
-    try assert(spark.table("lineitem").count() ==
+    assert(ScaleProbes.replicated(spark, dir, 64).table("lineitem").count() ==
       64 * Tables.load(spark, dir, "lineitem").count())
-    finally Tables.registerAll(spark, dir)
   }
 }

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins the r20 registerAll memo contract (Tables.registeredFor): a
-  * repeat call is a no-op, a view replaced outside registerAll needs
-  * invalidateRegistered for the next registerAll to restore it, and an
-  * sfDir change re-registers without any explicit invalidation — the
-  * exact hazards the memo introduced.
+/** Pins the registerAll memo contract (Tables.registeredFor): a repeat
+  * call is a no-op and an sfDir change re-registers. Nothing else may
+  * replace the ten views in a caller's session — the scale probes build
+  * their replicated views in a child session — so the memo never needs
+  * invalidating.
   */
 class TablesSpec extends SparkSuite {
 
@@ -28,33 +28,14 @@ class TablesSpec extends SparkSuite {
       s"(orders sf0.01=$b vs sf0.001=$a2)")
   }
 
-  test("a replaced base view is restored only after invalidateRegistered") {
-    Tables.registerAll(spark, sfA)
-    val real = nationRows()
-    // simulate what ScaleProbes.registerReplicated does: overwrite a
-    // base view outside registerAll...
-    spark.range(3).toDF("n_nationkey").createOrReplaceTempView("nation")
-    assert(nationRows() == 3)
-    // ...a memo-hit registerAll must NOT be relied on to restore it
-    // (the memo still says sfA is registered), which is exactly why the
-    // replacing site must invalidate:
-    Tables.invalidateRegistered(spark)
-    Tables.registerAll(spark, sfA)
-    assert(nationRows() == real,
-      "invalidateRegistered + registerAll must restore the base view")
-  }
-
-  test("registerReplicated leaves the NEXT registerAll able to restore the 1x views") {
-    // the end-to-end shape of the hazard: a scale probe replaces views
-    // at factor 2, then the probe's own restore path (registerAll) must
-    // bring the base tables back despite the memo
+  test("a scale probe never changes the caller's ten views") {
     Tables.registerAll(spark, sfA)
     val base = spark.table("lineitem").count()
-    queries.ScaleProbes.registerReplicated(spark, sfA, factor = 2)
-    assert(spark.table("lineitem").count() == base * 2,
-      "replicated views must be active during the probe")
-    Tables.registerAll(spark, sfA)
+    val child = queries.ScaleProbes.replicated(spark, sfA, factor = 2)
+    assert(child.table("lineitem").count() == base * 2,
+      "replicated views must be active in the probe's session")
+    assert(SparkEntry.benchOnly("b_tpch18_scale8")(spark, sfA).count() == 1)
     assert(spark.table("lineitem").count() == base,
-      "the probe's restore registerAll must bring back the 1x views")
+      "the caller must still see the 1x views")
   }
 }
