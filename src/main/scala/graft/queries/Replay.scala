@@ -143,8 +143,8 @@ object Replay {
     // open/close overhead. The sharded scale probes RAISE this — at 64x
     // key breadth the 2-partition store is the bottleneck and sharding
     // is the production lever.
-    val callerShards = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val effectiveShards = math.min(callerShards, shufflePartitions)
+    val effectiveShards =
+      math.min(s.conf.get("spark.sql.shuffle.partitions").toInt, shufflePartitions)
     // a clamped shard request must be self-describing: a sharded probe
     // recorded on a narrow host would otherwise carry its 8-shard
     // label over an under-sharded measurement

@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal accessor for Spark's `private[sql]` Column <-> Expression
   * conversion — the one internal seam a library registering native
   * Catalyst expressions needs. Lives in an `org.apache.spark.sql`
-  * subpackage solely to satisfy the access modifiers; everything else in
+  * subpackage solely to satisfy the access modifier; everything else in
   * this project stays in `graft.*` against public API.
   */
 object Bridge {
